@@ -756,7 +756,7 @@ def silence_benign_bench_warns(spark) -> None:
 
 def main() -> None:
     from golang_etl_spark.registry import all_queries
-    from golang_etl_spark.session import default_parallelism, get_spark
+    from golang_etl_spark.session import get_spark
 
     spark = get_spark(app_name="golang_etl_spark_bench")
     silence_benign_bench_warns(spark)
@@ -885,16 +885,17 @@ def main() -> None:
         "sf": sf,
         # self-report the parallelism contract (VERDICT r17 item 2:
         # the driver's scaling probe flagged suspect_cpus_ignored with
-        # nothing on the line to check against). cpus is the honored
-        # $SPARK_GRAFT_CPUS value, master the actual session master,
-        # default_parallelism the JVM's own view — three independent
-        # ways to verify the env var took effect. Note for the probe:
+        # nothing on the line to check against). cpus comes from the
+        # live session, not a re-read of $SPARK_GRAFT_CPUS: getOrCreate
+        # may have reused a session built under another env, and the
+        # line must describe the session that actually ran. master is
+        # that session's master string. Note for the probe:
         # at sf0.1 nearly every query is sub-second and dominated by
         # fixed per-query driver/scheduling overhead, so wall time
         # barely moves with core count (r17: a quiet 8-core run's
         # TOTAL beat a noisy 32-core run's); core-ratios ~1 here are
         # that fixed overhead, not an ignored setting.
-        "cpus": default_parallelism(),
+        "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "n_queries": len(timings),

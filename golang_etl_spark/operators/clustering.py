@@ -1014,10 +1014,14 @@ def kcore_peel(
 
     def restrict(e: DataFrame, surv: DataFrame) -> DataFrame:
         # survivor sets are vertex-sized (orders of magnitude below
-        # the edge list) — broadcast both semi-joins; the two
-        # identical broadcast subtrees share one exchange via
-        # ReusedExchange. On a billion-vertex graph pre-partition
-        # edges and survivors on the vertex instead.
+        # the edge list) — broadcast both semi-joins. The initial
+        # plan gives each join its own BroadcastExchange of the set
+        # (plans/r18/graph_kcore_peel_after.txt is that plan:
+        # isFinalPlan=false, no ReusedExchange); at run time AQE's
+        # final plan serves the second join from a ReusedExchange of
+        # the first, so the set ships once per round. On a
+        # billion-vertex graph pre-partition edges and survivors on
+        # the vertex instead.
         return e.join(
             F.broadcast(surv), e.u == surv.vertex, "left_semi"
         ).join(F.broadcast(surv), F.col("v") == surv.vertex, "left_semi")

@@ -1,4 +1,5 @@
-"""Source-catalog tests: the events.ts normalization path.
+"""Source-catalog tests: the events.ts normalization path and the
+per-file schema cache.
 
 The fixture ``events.ts`` physical type has varied across driver
 drops: INT64 TIMESTAMP(NANOS) (read as raw long under
@@ -11,7 +12,10 @@ microsecond values DuckDB reads — which is what keeps every ts-bearing
 oracle comparable.
 """
 
+import uuid
+
 import duckdb
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -82,3 +86,48 @@ def test_catalog_covers_all_fixture_tables(spark, sf_dir):
     for t in TABLES:
         df = load_table(spark, sf_dir, t)
         assert len(df.columns) > 0
+
+
+def _jobs_launched(spark, fn):
+    """(fn(), number of Spark jobs fn launched)."""
+    sc = spark.sparkContext
+    group = f"test_sources:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_reuses_inferred_schema(spark, sf_dir):
+    # inference is a Spark job over the file footers; once a file's
+    # schema is known, a reload declares it and launches nothing
+    load_table(spark, sf_dir, "orders")
+    schema, jobs = _jobs_launched(
+        spark, lambda: load_table(spark, sf_dir, "orders").schema
+    )
+    assert jobs == 0
+    assert schema == spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    first, jobs = _jobs_launched(
+        spark, lambda: load_table(spark, str(tmp_path), "region").schema
+    )
+    assert jobs == 1
+    _, jobs = _jobs_launched(
+        spark, lambda: load_table(spark, str(tmp_path), "region").schema
+    )
+    assert jobs == 0
+    pq.write_table(
+        pa.table({"r_regionkey": [0], "r_name": ["A"], "r_comment": ["c"]}), path
+    )
+    df, jobs = _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs == 1
+    assert df.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert df.schema != first
+    assert df.collect()[0]["r_comment"] == "c"
